@@ -185,6 +185,36 @@ def test_knn_join_batch_exact_and_ivf_degradation(emb):
             for r in full.collect()} == got
 
 
+def test_dim_kernels_null_mismatched_vectors(spark):
+    """The unrolled dim= kernels score a vector of the wrong length NULL
+    (as the higher-order fold does) instead of its truncated prefix or
+    an out-of-range error."""
+    from traval_spark.operators.similarity import (
+        cosine_dup_pairs,
+        cosine_to_query,
+        knn_join,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0]), (3, [1.0, 0.0, 0.0, 5.0])],
+        schema)
+    queries = spark.createDataFrame([(0, [1.0, 0.0, 0.0])], schema)
+    expect = {1: 1.0, 2: None, 3: None}
+    for kw in ({"dim": 3}, {}):
+        got = {r["nn_id"]: r["cos"]
+               for r in knn_join(queries, corpus, k=3, **kw).collect()}
+        assert got == expect, kw
+    got = {r["vec_id"]: r["cos"]
+           for r in cosine_to_query(corpus, [1.0, 0.0, 0.0]).collect()}
+    assert got == expect
+    # a mismatched vector never pairs (its score is NULL, not the
+    # prefix cosine 1/sqrt(26) that would pass this threshold)
+    pairs = cosine_dup_pairs(corpus.union(queries), threshold=0.1,
+                             bucketed=False, dim=3).collect()
+    assert {(r["a"], r["b"]) for r in pairs} == {(0, 1)}
+
+
 def test_minhash_incremental_equals_restricted_full(spark):
     """minhash_incremental_pairs == lsh_banded_pairs restricted to pairs
     with >= 1 new member; corpus-vs-corpus pairs never surface."""

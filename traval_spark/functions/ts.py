@@ -509,11 +509,6 @@ def positional_interpolate_specs(
     return df.drop(*helpers)
 
 
-def positional_interpolate(df: DataFrame, col: str, out: str) -> DataFrame:
-    """Single-column wrapper over :func:`positional_interpolate_specs`."""
-    return positional_interpolate_specs(df, [(col, out)])
-
-
 def _smooth_bound(b: DataFrame, col: str, smoothfreq: str, upper: bool) -> DataFrame:
     t = shift_series_forward_backward(b, col, smoothfreq)
     t = positional_interpolate_specs(t, [("bwd", "__bi"), ("fwd", "__fi")])

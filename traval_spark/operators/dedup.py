@@ -83,25 +83,6 @@ def shingles(text: Column, k: int = 3) -> Column:
     return F.array_distinct(kgrams(ws_tokens(text), k))
 
 
-def minhash_signature(text: Column, n_hashes: int = 4, k: int = 3) -> list[Column]:
-    """MinHash signature: per hash-family member b, min over shingles of
-    md5(b || '|' || shingle). md5-hex string order is a fixed pseudo-random
-    permutation of the shingle space — the textbook construction with a
-    portable hash.
-
-    Prefer :func:`with_minhash` — it materializes the shingle array once;
-    these raw columns each re-derive the shingles (fine for one column,
-    4x redundant work for a full signature).
-    """
-    sh = shingles(text, k)
-    return [
-        F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{b}|"), s)))
-        ).alias(f"sig_{b}")
-        for b in range(n_hashes)
-    ]
-
-
 def _minhash_over(sh: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
     """(id, sig_0..sig_{n-1}) from an (id, __sh) shingle frame — the
     MinHash core shared by the word-shingle (:func:`with_minhash`) and
@@ -297,12 +278,6 @@ def with_simhash16(df: DataFrame, text_col: str = "text",
 # variant above keeps only 65k distinct buckets — at 10^10 docs every
 # bucket is huge, VERDICT r1)
 # ---------------------------------------------------------------------------
-
-
-def _md5_nibble(h: Column, j: int) -> Column:
-    """Integer value of hex digit ``j`` (0-based) of an md5 hex string —
-    portable: DuckDB mirrors it with strpos('0123..f', substr(h, j+1, 1))-1."""
-    return F.conv(F.substring(h, j + 1, 1), 16, 10).cast("int")
 
 
 def with_simhash64(df: DataFrame, text_col: str = "text",

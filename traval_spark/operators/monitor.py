@@ -910,6 +910,187 @@ def time_weighted_avg(
     )
 
 
+# ---------------------------------------------------------------------------
+# Shared building blocks of the two-snapshot drift family (one pair of bin
+# tables serves every statistic) and of the pairwise-slope trend family
+# ---------------------------------------------------------------------------
+
+
+def _pair_hists(df_a, df_b, by, val, scale):
+    """The two-snapshot discretization (``round(v*scale)``, the hist.py
+    bin convention) — two count frames ``*by, bin, ca`` / ``*by, bin,
+    cb`` ready for any ``*_from_hists`` read, so every drift statistic
+    in this family can also be served from a stored histogram tier."""
+    def hist(d, cname):
+        return d.groupBy(
+            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
+        ).agg(F.count("*").alias(cname))
+
+    return hist(df_a, "ca"), hist(df_b, "cb")
+
+
+def _bin_pairs(ha, hb, by):
+    """``*by, bin, ca, cb`` over the union of both snapshots' bins — a
+    bin observed on one side only counts 0 on the other."""
+    return ha.join(hb, [*by, "bin"], "full_outer").select(
+        *by, "bin",
+        F.coalesce("ca", F.lit(0)).alias("ca"),
+        F.coalesce("cb", F.lit(0)).alias("cb"),
+    )
+
+
+def _bin_totals(ha, hb, by, *cols):
+    """:func:`_bin_pairs` projected to ``*by, bin, *cols`` and joined to
+    its per-group totals ``n_a, n_b, n_bins``."""
+    j = _bin_pairs(ha, hb, by)
+    tot = j.groupBy(*by).agg(
+        F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b"),
+        F.count("*").alias("n_bins"),
+    )
+    return j.select(*by, "bin", *cols).join(tot, list(by))
+
+
+def _cdf(by):
+    """The running (inclusive, ascending-bin) counts ``cca, ccb`` of the
+    bin pairs — exact decimals."""
+    w = (
+        Window.partitionBy(*by).orderBy("bin")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return [F.sum(F.col(c).cast("decimal(38,0)")).over(w).alias("c" + c)
+            for c in ("ca", "cb")]
+
+
+def _cdf_gap():
+    """``CA*n_b - CB*n_a``: the CDF gap at a bin with both denominators
+    cleared — an exact decimal integer."""
+    return (F.col("cca") * F.col("n_b").cast("decimal(38,0)")
+            - F.col("ccb") * F.col("n_a").cast("decimal(38,0)"))
+
+
+def _n_ab():
+    """``n_a * n_b`` as one double of an exact decimal product."""
+    return (F.col("n_a").cast("decimal(38,0)")
+            * F.col("n_b").cast("decimal(38,0)")).cast("double")
+
+
+def _cum_lt(t, by):
+    """Observations in strictly smaller bins: the running sum of ``t``
+    before the current bin (0 at the first) — the midrank base."""
+    w_lt = (
+        Window.partitionBy(*by).orderBy("bin")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return F.coalesce(F.sum(t).over(w_lt), F.lit(0).cast("decimal(38,0)"))
+
+
+def _rank_sums(ha, hb, by, *aggs):
+    """Per group ``n_a, n_b`` and ``__r2`` = 2 * sample a's rank sum off
+    the bin pairs (every member of bin v has midrank cum_lt + (t_v+1)/2;
+    doubling keeps it an exact decimal(38,0) integer), then ``*aggs``
+    over the per-bin ``ca, cb, t, cum_lt``."""
+    j = _bin_pairs(ha, hb, by).select(
+        *by, "bin",
+        F.col("ca").cast("decimal(38,0)").alias("ca"),
+        F.col("cb").cast("decimal(38,0)").alias("cb"),
+    )
+    t = F.col("ca") + F.col("cb")
+    per_bin = j.select(*by, "ca", "cb", t.alias("t"),
+                       _cum_lt(t, by).alias("cum_lt"))
+    return per_bin.groupBy(*by).agg(
+        F.sum("ca").alias("n_a"),
+        F.sum("cb").alias("n_b"),
+        F.sum(
+            F.col("ca") * (2 * F.col("cum_lt") + F.col("t") + 1)
+        ).alias("__r2"),
+        *aggs,
+    )
+
+
+def _cc_z(s, sd):
+    """(s - 1)/sd above 0, (s + 1)/sd below, 0 at s = 0 — the
+    continuity-corrected normal score of an exact integer statistic."""
+    return (
+        F.when(s > 0, (s - 1).cast("double") / sd)
+        .when(s < 0, (s + 1).cast("double") / sd)
+        .otherwise(F.lit(0.0))
+    )
+
+
+def _n_buckets(sig):
+    """``g, n_buckets`` of a count signal."""
+    return sig.groupBy("g").agg(F.count(F.lit(1)).alias("n_buckets"))
+
+
+def _bucket_pairs(sig, keys):
+    """Every bucket pair ``hi < hj`` of a count signal sharing ``keys``
+    (``g``, or ``g`` plus a season): ``*keys, hi, ci, hj, cj`` — the
+    O(m^2) self-join, run on the tiny signal frame."""
+    a = sig.select(*keys, F.col("h").alias("hi"), F.col("c").alias("ci"))
+    b = sig.select(*keys, F.col("h").alias("hj"), F.col("c").alias("cj"))
+    return a.join(b, list(keys)).filter(F.col("hj") > F.col("hi"))
+
+
+def _slopes(sig, keys):
+    """``g, s``: every bucket pair's slope (c_j - c_i) / (h_j - h_i) —
+    one division of two exact integers."""
+    return _bucket_pairs(sig, keys).select(
+        "g",
+        (
+            (F.col("cj") - F.col("ci")).cast("double")
+            / (F.col("hj") - F.col("hi")).cast("double")
+        ).alias("s"),
+    )
+
+
+def _sign_sum(sig, keys):
+    """``g, s_stat``: the Mann-Kendall S = sum of sign(c_j - c_i) over
+    the bucket pairs — an exact integer."""
+    return _bucket_pairs(sig, keys).groupBy("g").agg(
+        F.sum(F.signum(F.col("cj") - F.col("ci")).cast("long"))
+        .alias("s_stat"))
+
+
+def _median_rank():
+    """True at the middle ascending rank(s) ``__rn`` of ``__n`` values:
+    floor((N+1)/2) and floor((N+2)/2) — one rank for odd N, two to
+    average for even N (DuckDB ``median()`` semantics)."""
+    return ((F.col("__rn") == F.floor((F.col("__n") + 1) / 2))
+            | (F.col("__rn") == F.floor((F.col("__n") + 2) / 2)))
+
+
+def _sen_median(sig, keys):
+    """``g, n_buckets, n_pairs, sen_slope``: the median of each series'
+    :func:`_slopes` over the bucket pairs sharing ``keys``."""
+    w = Window.partitionBy("g").orderBy("s")
+    ranked = _slopes(sig, keys).withColumn(
+        "__rn", F.row_number().over(w)
+    ).withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy("g")))
+    med = ranked.filter(_median_rank()).groupBy("g").agg(
+        F.max("__n").alias("n_pairs"), F.avg("s").alias("sen_slope")
+    )
+    return _n_buckets(sig).join(med, "g")
+
+
+def _tie_census(sig, keys, *aggs):
+    """Per ``keys``: ``*aggs`` over the tie groups (buckets of equal
+    count, size ``t``), then ``__tt`` = sum t(t-1)(2t+5) — the exact
+    integer tie term of the Mann-Kendall variance."""
+    return (
+        sig.groupBy(*keys, "c").agg(F.count(F.lit(1)).alias("t"))
+        .groupBy(*keys)
+        .agg(*aggs, F.sum(
+            F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)
+        ).alias("__tt"))
+    )
+
+
+def _mk_var_num(n):
+    """18 * Var(S) of Mann-Kendall over ``n`` buckets with tie term
+    ``__tt``: n(n-1)(2n+5) - __tt, an exact integer."""
+    return n * (n - 1) * (2 * n + 5) - F.col("__tt")
+
+
 def psi_drift(
     df_a: DataFrame,
     df_b: DataFrame,
@@ -938,12 +1119,7 @@ def psi_drift(
     drifting, > 0.25 shifted.  One groupBy per snapshot + a full-outer
     join on the tiny bin table.  Output: ``*by, n_bins, psi``.
     """
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    return psi_from_hists(hist(df_a, "ca"), hist(df_b, "cb"),
+    return psi_from_hists(*_pair_hists(df_a, df_b, by, val, scale),
                           by=by, ndigits=ndigits)
 
 
@@ -957,21 +1133,9 @@ def psi_from_hists(
     bin, cb``) — the tier-served drift path: feed it per-period bin
     counts summed straight off a stored hist tier (hist.py) and the
     drift read never re-scans raw (pytest proves tiered == direct)."""
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by, "bin",
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
-    tot = j.groupBy(*by).agg(
-        F.sum("ca").alias("na"), F.sum("cb").alias("nb"),
-        F.count("*").alias("n_bins"),
-    )
-    t = j.join(tot, list(by))
-    p = (F.col("ca") + F.lit(0.5)) / (F.col("na") + 0.5 * F.col("n_bins"))
-    q = (F.col("cb") + F.lit(0.5)) / (F.col("nb") + 0.5 * F.col("n_bins"))
+    t = _bin_totals(ha, hb, by, "ca", "cb")
+    p = (F.col("ca") + F.lit(0.5)) / (F.col("n_a") + 0.5 * F.col("n_bins"))
+    q = (F.col("cb") + F.lit(0.5)) / (F.col("n_b") + 0.5 * F.col("n_bins"))
     term = (p - q) * F.log(p / q)
     return (
         t.groupBy(*by)
@@ -1090,32 +1254,7 @@ def theil_sen(
     """
     sig = bucket_count_signal(df, bucket=bucket, by=by, ts=ts,
                               counts=counts)
-    a = sig.select("g", F.col("h").alias("hi"), F.col("c").alias("ci"))
-    b = sig.select("g", F.col("h").alias("hj"), F.col("c").alias("cj"))
-    slopes = (
-        a.join(b, "g")
-        .filter(F.col("hj") > F.col("hi"))
-        .select(
-            "g",
-            (
-                (F.col("cj") - F.col("ci")).cast("double")
-                / (F.col("hj") - F.col("hi")).cast("double")
-            ).alias("s"),
-        )
-    )
-    w = Window.partitionBy("g").orderBy("s")
-    ranked = slopes.withColumn("__rn", F.row_number().over(w)).withColumn(
-        "__n", F.count(F.lit(1)).over(Window.partitionBy("g"))
-    )
-    mid = ranked.filter(
-        (F.col("__rn") == F.floor((F.col("__n") + 1) / 2))
-        | (F.col("__rn") == F.floor((F.col("__n") + 2) / 2))
-    )
-    nb = sig.groupBy("g").agg(F.count(F.lit(1)).alias("n_buckets"))
-    med = mid.groupBy("g").agg(
-        F.max("__n").alias("n_pairs"), F.avg("s").alias("sen_slope")
-    )
-    return nb.join(med, "g")
+    return _sen_median(sig, ["g"])
 
 
 def seasonal_strength(
@@ -1290,53 +1429,20 @@ def ks_from_hists(
     one groupBy.  Output: ``*by, n_a, n_b, ks_d, at_bin, drifted``
     (drifted = D above the alpha=0.05 distribution-free fence).
     """
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by, "bin",
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
-    w = (
-        Window.partitionBy(*by).orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = j.select(
-        *by, "bin",
-        F.sum(F.col("ca").cast("decimal(38,0)")).over(w).alias("cca"),
-        F.sum(F.col("cb").cast("decimal(38,0)")).over(w).alias("ccb"),
-    )
-    tot = j.groupBy(*by).agg(
-        F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b")
-    )
-    t = cum.join(tot, list(by))
-    num = F.abs(
-        F.col("cca") * F.col("n_b").cast("decimal(38,0)")
-        - F.col("ccb") * F.col("n_a").cast("decimal(38,0)")
-    )
+    t = _bin_totals(ha, hb, by, *_cdf(by))
     best = t.groupBy(*by).agg(
         F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"),
-        F.max(F.struct(num.alias("num"), F.col("bin"))).alias("__m"),
+        F.max(F.struct(F.abs(_cdf_gap()).alias("num"), F.col("bin")))
+        .alias("__m"),
     )
-    ks_d = (
-        F.col("__m")["num"].cast("double")
-        / (
-            F.col("n_a").cast("decimal(38,0)")
-            * F.col("n_b").cast("decimal(38,0)")
-        ).cast("double")
-    )
+    ks_d = F.col("__m")["num"].cast("double") / _n_ab()
     # the alpha=0.05 large-sample fence c(alpha)*sqrt((na+nb)/(na*nb)),
     # c(0.05)=1.358 — distribution-free, so the drifted verdict needs no
     # assumption about the measure's shape; both operands are doubles of
     # exact integers, rounded 9dp before the compare (the slo_burn guard
     # against a last-ulp flip flipping the verdict cross-engine)
     fence = F.lit(1.358) * F.sqrt(
-        (F.col("n_a") + F.col("n_b")).cast("double")
-        / (
-            F.col("n_a").cast("decimal(38,0)")
-            * F.col("n_b").cast("decimal(38,0)")
-        ).cast("double")
+        (F.col("n_a") + F.col("n_b")).cast("double") / _n_ab()
     )
     return best.select(
         *by, "n_a", "n_b",
@@ -1358,12 +1464,7 @@ def ks_drift(
     same read serves from raw or from a stored histogram tier
     (:func:`ks_from_hists`, parity-tested).  One groupBy per snapshot;
     everything downstream runs on the tiny bin table."""
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    return ks_from_hists(hist(df_a, "ca"), hist(df_b, "cb"), by=by)
+    return ks_from_hists(*_pair_hists(df_a, df_b, by, val, scale), by=by)
 
 
 def fano_dispersion(
@@ -1465,34 +1566,9 @@ def mw_from_hists(
     tier's counts (parity-tested) and the read never re-scans raw.
     Output: ``*by, n_a, n_b, u_a, z, shifted``.
     """
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by, "bin",
-            F.coalesce("ca", F.lit(0)).cast("decimal(38,0)").alias("ca"),
-            F.coalesce("cb", F.lit(0)).cast("decimal(38,0)").alias("cb"),
-        )
-    )
-    w_lt = (
-        Window.partitionBy(*by).orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    t = F.col("ca") + F.col("cb")
-    per_bin = j.select(
-        *by, "ca", "cb", t.alias("t"),
-        F.coalesce(F.sum(t).over(w_lt), F.lit(0).cast("decimal(38,0)"))
-        .alias("cum_lt"),
-    )
-    g = per_bin.groupBy(*by).agg(
-        F.sum("ca").alias("n_a"),
-        F.sum("cb").alias("n_b"),
-        F.sum(
-            F.col("ca") * (2 * F.col("cum_lt") + F.col("t") + 1)
-        ).alias("__r2"),
-        F.sum(
-            F.col("t") * F.col("t") * F.col("t") - F.col("t")
-        ).alias("__tt"),
-    )
+    g = _rank_sums(ha, hb, by, F.sum(
+        F.col("t") * F.col("t") * F.col("t") - F.col("t")
+    ).alias("__tt"))
     n = F.col("n_a") + F.col("n_b")
     u2 = F.col("__r2") - F.col("n_a") * (F.col("n_a") + 1)  # 2*U_a, exact
     d2 = u2 - F.col("n_a") * F.col("n_b")                   # 2*(U - mu)
@@ -1502,9 +1578,7 @@ def mw_from_hists(
         * var_num.cast("double")
         / (12 * n * (n - 1)).cast("double")
     )
-    z = F.when(d2 > 0, (d2 - 1).cast("double") / (2 * F.sqrt(var_s))) \
-         .when(d2 < 0, (d2 + 1).cast("double") / (2 * F.sqrt(var_s))) \
-         .otherwise(F.lit(0.0))
+    z = _cc_z(d2, 2 * F.sqrt(var_s))
     z_out = F.when(
         (F.col("n_a") * F.col("n_b") > 0) & (var_num > 0),
         F.round(z, ndigits),
@@ -1534,12 +1608,7 @@ def mann_whitney(
     MW says WHICH WAY and whether the shift survives the alpha=0.05
     rank test.  One groupBy per snapshot; everything downstream runs on
     the tiny bin table."""
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    return mw_from_hists(hist(df_a, "ca"), hist(df_b, "cb"), by=by)
+    return mw_from_hists(*_pair_hists(df_a, df_b, by, val, scale), by=by)
 
 
 def mann_kendall(
@@ -1575,35 +1644,12 @@ def mann_kendall(
     """
     sig = bucket_count_signal(df, bucket=bucket, by=by, ts=ts,
                               counts=counts)
-    a = sig.select("g", F.col("h").alias("hi"), F.col("c").alias("ci"))
-    b = sig.select("g", F.col("h").alias("hj"), F.col("c").alias("cj"))
-    s = (
-        a.join(b, "g")
-        .filter(F.col("hj") > F.col("hi"))
-        .groupBy("g")
-        .agg(F.sum(F.signum(F.col("cj") - F.col("ci")).cast("long"))
-             .alias("s_stat"))
-    )
-    nb = sig.groupBy("g").agg(F.count(F.lit(1)).alias("n_buckets"))
-    tie = (
-        sig.groupBy("g", "c").agg(F.count(F.lit(1)).alias("t"))
-        .groupBy("g")
-        .agg(F.sum(
-            F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)
-        ).alias("__tt"))
-    )
-    n = F.col("n_buckets")
-    var_num = n * (n - 1) * (2 * n + 5) - F.col("__tt")
+    var_num = _mk_var_num(F.col("n_buckets"))
     var_s = var_num.cast("double") / F.lit(18.0)
-    z = F.when(
-        F.col("s_stat") > 0,
-        (F.col("s_stat") - 1).cast("double") / F.sqrt(var_s),
-    ).when(
-        F.col("s_stat") < 0,
-        (F.col("s_stat") + 1).cast("double") / F.sqrt(var_s),
-    ).otherwise(F.lit(0.0))
+    z = _cc_z(F.col("s_stat"), F.sqrt(var_s))
     return (
-        nb.join(s, "g").join(tie, "g")
+        _n_buckets(sig).join(_sign_sum(sig, ["g"]), "g")
+        .join(_tie_census(sig, ["g"]), "g")
         .select(
             "g", "n_buckets", "s_stat", var_s.alias("var_s"),
             F.when(var_num > 0, F.round(z, ndigits)).alias("z"),
@@ -1858,19 +1904,6 @@ def benford_digits(
     )
 
 
-def _pair_hists(df_a, df_b, by, val, scale):
-    """The psi/ks/mw snapshot discretization (``round(v*scale)``, the
-    hist.py bin convention) — two count frames ready for any
-    ``*_from_hists`` read, so every drift statistic in this family can
-    also be served from a stored histogram tier."""
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    return hist(df_a, "ca"), hist(df_b, "cb")
-
-
 def emd_from_hists(
     ha: DataFrame,
     hb: DataFrame,
@@ -1903,43 +1936,18 @@ def emd_from_hists(
     the tiny bin table, one cumsum + lead window per series over bins,
     one groupBy.  Output: ``*by, n_a, n_b, emd`` (bin units).
     """
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by, "bin",
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
     wo = Window.partitionBy(*by).orderBy("bin")
-    w = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum = j.select(
-        *by, "bin",
-        F.sum(F.col("ca").cast("decimal(38,0)")).over(w).alias("cca"),
-        F.sum(F.col("cb").cast("decimal(38,0)")).over(w).alias("ccb"),
-        (F.lead("bin").over(wo) - F.col("bin")).alias("__gap"),
-    )
-    tot = j.groupBy(*by).agg(
-        F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b")
-    )
-    t = cum.join(tot, list(by))
-    num = F.abs(
-        F.col("cca") * F.col("n_b").cast("decimal(38,0)")
-        - F.col("ccb") * F.col("n_a").cast("decimal(38,0)")
-    ) * F.coalesce(F.col("__gap"), F.lit(0)).cast("decimal(38,0)")
+    t = _bin_totals(ha, hb, by, *_cdf(by),
+                    (F.lead("bin").over(wo) - F.col("bin")).alias("__gap"))
+    num = F.abs(_cdf_gap()) * F.coalesce(
+        F.col("__gap"), F.lit(0)).cast("decimal(38,0)")
     agg = t.groupBy(*by).agg(
         F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"),
         F.sum(num).alias("__num"),
     )
     return agg.select(
         *by, "n_a", "n_b",
-        (
-            F.col("__num").cast("double")
-            / (
-                F.col("n_a").cast("decimal(38,0)")
-                * F.col("n_b").cast("decimal(38,0)")
-            ).cast("double")
-        ).alias("emd"),
+        (F.col("__num").cast("double") / _n_ab()).alias("emd"),
     )
 
 
@@ -1955,8 +1963,7 @@ def emd_drift(
     raw or from a stored histogram tier (:func:`emd_from_hists`,
     parity-tested).  One groupBy per snapshot; everything downstream
     runs on the tiny bin table."""
-    ha, hb = _pair_hists(df_a, df_b, by, val, scale)
-    return emd_from_hists(ha, hb, by=by)
+    return emd_from_hists(*_pair_hists(df_a, df_b, by, val, scale), by=by)
 
 
 def jsd_from_hists(
@@ -1985,21 +1992,9 @@ def jsd_from_hists(
     off a stored hist tier).  Output: ``*by, n_bins, n_a, n_b, jsd,
     jsd_norm`` (jsd_norm = jsd/ln 2 in [0, 1]).
     """
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by,
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
-    tot = j.groupBy(*by).agg(
-        F.sum("ca").alias("na"), F.sum("cb").alias("nb"),
-        F.count("*").alias("n_bins"),
-    )
-    t = j.join(tot, list(by))
-    p = F.col("ca").cast("double") / F.col("na").cast("double")
-    q = F.col("cb").cast("double") / F.col("nb").cast("double")
+    t = _bin_totals(ha, hb, by, "ca", "cb")
+    p = F.col("ca").cast("double") / F.col("n_a").cast("double")
+    q = F.col("cb").cast("double") / F.col("n_b").cast("double")
     m = (p + q) / F.lit(2.0)
     term = (
         F.when(F.col("ca") > 0, p * F.log(p / m)).otherwise(F.lit(0.0))
@@ -2007,7 +2002,7 @@ def jsd_from_hists(
     ) / F.lit(2.0)
     out = t.groupBy(*by).agg(
         F.max("n_bins").alias("n_bins"),
-        F.max("na").alias("n_a"), F.max("nb").alias("n_b"),
+        F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"),
         F.sum(term).alias("__jsd"),
     )
     return out.select(
@@ -2032,8 +2027,8 @@ def jsd_drift(
     """JSD drift between two snapshots of the same measure, binned by
     the hist.py discretization so the same read serves from raw or from
     a stored histogram tier (:func:`jsd_from_hists`, parity-tested)."""
-    ha, hb = _pair_hists(df_a, df_b, by, val, scale)
-    return jsd_from_hists(ha, hb, by=by, ndigits=ndigits)
+    return jsd_from_hists(*_pair_hists(df_a, df_b, by, val, scale),
+                          by=by, ndigits=ndigits)
 
 
 def chi2_from_hists(
@@ -2077,37 +2072,18 @@ def chi2_from_hists(
     dof, chi2, cramers_v, drifted``.  Bins empty on BOTH sides can't
     occur (the join only yields observed bins); dof = n_bins - 1.
     """
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by,
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
-    tot = j.groupBy(*by).agg(
-        F.sum("ca").alias("na"), F.sum("cb").alias("nb"),
-        F.count("*").alias("n_bins"),
-    )
-    t = j.join(tot, list(by))
+    t = _bin_totals(ha, hb, by, "ca", "cb")
     d = (
-        F.col("ca").cast("decimal(38,0)") * F.col("nb").cast("decimal(38,0)")
-        - F.col("cb").cast("decimal(38,0)") * F.col("na").cast("decimal(38,0)")
+        F.col("ca").cast("decimal(38,0)") * F.col("n_b").cast("decimal(38,0)")
+        - F.col("cb").cast("decimal(38,0)") * F.col("n_a").cast("decimal(38,0)")
     ).cast("double")
     term = d * d / (F.col("ca") + F.col("cb")).cast("double")
     g = t.groupBy(*by).agg(
-        F.max("na").alias("n_a"), F.max("nb").alias("n_b"),
+        F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"),
         (F.max("n_bins") - 1).alias("dof"),
         F.sum(term).alias("__s"),
     )
-    chi2 = F.round(
-        F.col("__s")
-        / (
-            F.col("n_a").cast("decimal(38,0)")
-            * F.col("n_b").cast("decimal(38,0)")
-        ).cast("double"),
-        ndigits,
-    )
+    chi2 = F.round(F.col("__s") / _n_ab(), ndigits)
     dofd = F.col("dof").cast("double")
     wh = dofd * F.pow(
         F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dofd)
@@ -2140,8 +2116,8 @@ def chi2_drift(
     measure, binned by the hist.py discretization so the same read
     serves from raw or from a stored histogram tier
     (:func:`chi2_from_hists`, parity-tested)."""
-    ha, hb = _pair_hists(df_a, df_b, by, val, scale)
-    return chi2_from_hists(ha, hb, by=by, ndigits=ndigits)
+    return chi2_from_hists(*_pair_hists(df_a, df_b, by, val, scale),
+                           by=by, ndigits=ndigits)
 
 
 def welch_ttest(
@@ -2710,16 +2686,8 @@ def kw_from_hists(
         F.col("cnt").cast("decimal(38,0)").alias("cnt"),
     )
     binf = j.groupBy(*by, "bin").agg(F.sum("cnt").alias("t"))
-    w_lt = (
-        Window.partitionBy(*by).orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    binf = binf.select(
-        *by, "bin", "t",
-        F.coalesce(
-            F.sum("t").over(w_lt), F.lit(0).cast("decimal(38,0)")
-        ).alias("cum_lt"),
-    )
+    binf = binf.select(*by, "bin", "t",
+                       _cum_lt(F.col("t"), by).alias("cum_lt"))
     r2v = 2 * F.col("cum_lt") + F.col("t") + 1
     tot = binf.groupBy(*by).agg(
         F.sum("t").alias("n_tot"),
@@ -3301,45 +3269,16 @@ def seasonal_mk(
     sig = bucket_count_signal(df, bucket=bucket, by=by, ts=ts,
                               counts=counts).withColumn(
         "m", F.col("h") % period)
-    a = sig.select("g", "m", F.col("h").alias("hi"),
-                   F.col("c").alias("ci"))
-    b = sig.select("g", "m", F.col("h").alias("hj"),
-                   F.col("c").alias("cj"))
-    s = (
-        a.join(b, ["g", "m"])
-        .filter(F.col("hj") > F.col("hi"))
-        .groupBy("g")
-        .agg(F.sum(F.signum(F.col("cj") - F.col("ci")).cast("long"))
-             .alias("s_stat"))
-    )
-    per = (
-        sig.groupBy("g", "m", "c").agg(F.count(F.lit(1)).alias("t"))
-        .groupBy("g", "m")
-        .agg(
-            F.sum("t").alias("n_m"),
-            F.sum(F.col("t") * (F.col("t") - 1)
-                  * (2 * F.col("t") + 5)).alias("tt_m"),
-        )
-    )
-    nm = F.col("n_m")
+    per = _tie_census(sig, ["g", "m"], F.sum("t").alias("n_m"))
     var_g = per.groupBy("g").agg(
-        F.sum(nm * (nm - 1) * (2 * nm + 5) - F.col("tt_m"))
-         .alias("var_num"),
+        F.sum(_mk_var_num(F.col("n_m"))).alias("var_num"),
         F.sum("n_m").alias("n_buckets"),
         F.count(F.lit(1)).alias("n_seasons"),
     )
     var_s = F.col("var_num").cast("double") / F.lit(18.0)
-    z_raw = F.when(
-        F.col("s_stat") > 0,
-        F.round((F.col("s_stat") - 1).cast("double") / F.sqrt(var_s),
-                ndigits),
-    ).when(
-        F.col("s_stat") < 0,
-        F.round((F.col("s_stat") + 1).cast("double") / F.sqrt(var_s),
-                ndigits),
-    ).otherwise(F.lit(0.0))
-    z = F.when(F.col("var_num") > 0, z_raw)
-    return var_g.join(s, "g").select(
+    z = F.when(F.col("var_num") > 0,
+               F.round(_cc_z(F.col("s_stat"), F.sqrt(var_s)), ndigits))
+    return var_g.join(_sign_sum(sig, ["g", "m"]), "g").select(
         "g",
         F.col("n_buckets").cast("long").alias("n_buckets"),
         F.col("n_seasons").cast("long").alias("n_seasons"),
@@ -3382,34 +3321,7 @@ def seasonal_sen(
     sig = bucket_count_signal(df, bucket=bucket, by=by, ts=ts,
                               counts=counts).withColumn(
         "m", F.col("h") % period)
-    a = sig.select("g", "m", F.col("h").alias("hi"),
-                   F.col("c").alias("ci"))
-    b = sig.select("g", "m", F.col("h").alias("hj"),
-                   F.col("c").alias("cj"))
-    slopes = (
-        a.join(b, ["g", "m"])
-        .filter(F.col("hj") > F.col("hi"))
-        .select(
-            "g",
-            (
-                (F.col("cj") - F.col("ci")).cast("double")
-                / (F.col("hj") - F.col("hi")).cast("double")
-            ).alias("s"),
-        )
-    )
-    w = Window.partitionBy("g").orderBy("s")
-    ranked = slopes.withColumn("__rn", F.row_number().over(w)).withColumn(
-        "__n", F.count(F.lit(1)).over(Window.partitionBy("g"))
-    )
-    mid = ranked.filter(
-        (F.col("__rn") == F.floor((F.col("__n") + 1) / 2))
-        | (F.col("__rn") == F.floor((F.col("__n") + 2) / 2))
-    )
-    nb = sig.groupBy("g").agg(F.count(F.lit(1)).alias("n_buckets"))
-    med = mid.groupBy("g").agg(
-        F.max("__n").alias("n_pairs"), F.avg("s").alias("sen_slope")
-    )
-    return nb.join(med, "g")
+    return _sen_median(sig, ["g", "m"])
 
 
 def hurst_rs(
@@ -3516,7 +3428,7 @@ def hurst_rs(
         F.log(F.col("w").cast("double")).alias("x"),
         F.log("mrs").alias("y"),
     )
-    nb = sig.groupBy("g").agg(F.count(F.lit(1)).alias("n_buckets"))
+    nb = _n_buckets(sig)
     ols = pts.groupBy("g").agg(
         F.count(F.lit(1)).alias("n_scales"),
         F.sum("x").alias("sx"), F.sum("y").alias("sy"),
@@ -3665,7 +3577,7 @@ def fleet_report(
     statistical panel a 100k-series deployment actually reads.
     """
     sig = bucket_count_signal(df, bucket=bucket, by=by, ts=ts,
-                              counts=counts).persist()
+                              counts=counts)
     base = fano_dispersion(counts=sig).select(
         "g", "n_buckets", "mean_c", "fano")
     parts = [
@@ -3734,49 +3646,26 @@ def sen_slope_ci(
     model-based CIs (rulelib.py); this is the distribution-free CI
     for series where no model exists.
     """
-    # the signal feeds the slope self-join, the bucket count, the tie
-    # census (and previously a theil_sen call that re-derived the whole
-    # O(m^2) pair frame): persist it — the r5 plan re-ran the raw
-    # groupBy per consumer (lambda-carrying subtrees defeat exchange
-    # reuse)
     sig = bucket_count_signal(df, bucket=bucket, by=by, ts=ts,
-                              counts=counts).persist()
-    a = sig.select("g", F.col("h").alias("hi_"), F.col("c").alias("ci"))
-    b = sig.select("g", F.col("h").alias("hj"), F.col("c").alias("cj"))
-    slopes = (
-        a.join(b, "g")
-        .filter(F.col("hj") > F.col("hi_"))
-        .select(
-            "g",
-            (
-                (F.col("cj") - F.col("ci")).cast("double")
-                / (F.col("hj") - F.col("hi_")).cast("double")
-            ).alias("s"),
-        )
-    )
+                              counts=counts)
     w = Window.partitionBy("g").orderBy("s")
-    ranked = slopes.withColumn("rn", F.row_number().over(w))
-    # MK variance from the tie census (exact integer numerator)
-    nb = sig.groupBy("g").agg(F.count(F.lit(1)).alias("n_buckets"))
-    tie = (
-        sig.groupBy("g", "c").agg(F.count(F.lit(1)).alias("t"))
-        .groupBy("g")
-        .agg(F.sum(F.col("t") * (F.col("t") - 1)
-                   * (2 * F.col("t") + 5)).alias("tt"))
-    )
+    ranked = _slopes(sig, ["g"]).withColumn("__rn", F.row_number().over(w))
     nn = F.col("n_buckets")
-    var_num = nn * (nn - 1) * (2 * nn + 5) - F.col("tt")
+    var_num = _mk_var_num(nn)
     npairs = (nn * (nn - 1) / 2).cast("long")
     c_half = F.round(
         F.lit(float(z_crit)) * F.sqrt(var_num.cast("double")
                                       / F.lit(18.0)),
         9,
     )
+    # __n is the pair count (== the slope count: every zero-filled
+    # bucket pair has a distinct h), so the median rank rule picks the
+    # same values as theil_sen's
     idx = (
-        nb.join(tie, "g")
+        _n_buckets(sig).join(_tie_census(sig, ["g"]), "g")
         .select(
             "g",
-            npairs.alias("n_pairs"),
+            npairs.alias("__n"),
             var_num.alias("__vn"),
             F.greatest(
                 F.lit(1),
@@ -3791,33 +3680,21 @@ def sen_slope_ci(
         )
     )
     # ONE pass over the ranked slope multiset extracts all four order
-    # statistics (previously: two rank-filter passes here plus a
-    # theil_sen call that rebuilt the identical pair frame and rank
-    # window a third and fourth time).  The median replicates
-    # theil_sen's selection verbatim — avg of the values at ascending
-    # ranks floor((N+1)/2) and floor((N+2)/2) of the SAME multiset
-    # (n_pairs == the slope count: every zero-filled bucket pair has a
-    # distinct h), so sen_slope is value-identical.
-    idx = idx.withColumn(
-        "__m1", F.floor((F.col("n_pairs") + 1) / 2)
-    ).withColumn("__m2", F.floor((F.col("n_pairs") + 2) / 2))
+    # statistics
     j = ranked.join(F.broadcast(idx), "g")
     stats = j.groupBy("g").agg(
-        F.max(F.when(F.col("rn") == F.col("__lor"), F.col("s")))
+        F.max(F.when(F.col("__rn") == F.col("__lor"), F.col("s")))
         .alias("lo"),
-        F.max(F.when(F.col("rn") == F.col("__hir"), F.col("s")))
+        F.max(F.when(F.col("__rn") == F.col("__hir"), F.col("s")))
         .alias("hi"),
-        F.avg(
-            F.when((F.col("rn") == F.col("__m1"))
-                   | (F.col("rn") == F.col("__m2")), F.col("s"))
-        ).alias("sen_slope"),
+        F.avg(F.when(_median_rank(), F.col("s"))).alias("sen_slope"),
     )
     out = idx.join(stats, "g")
     valid = F.col("__vn") > 0
     lo_o = F.when(valid, F.col("lo"))
     hi_o = F.when(valid, F.col("hi"))
     return out.select(
-        "g", "n_pairs", "sen_slope",
+        "g", F.col("__n").alias("n_pairs"), "sen_slope",
         lo_o.alias("lo"), hi_o.alias("hi"),
         F.when(
             valid,
@@ -3863,40 +3740,20 @@ def cvm_from_hists(
     tiny bin table, one cumsum window, one groupBy.  Output: ``*by,
     n_a, n_b, cvm, drifted``.
     """
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by, "bin",
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
-    w = (
-        Window.partitionBy(*by).orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = j.select(
-        *by, "bin",
+    t = _bin_totals(
+        ha, hb, by,
         (F.col("ca") + F.col("cb")).cast("decimal(38,0)").alias("h"),
-        F.sum(F.col("ca").cast("decimal(38,0)")).over(w).alias("cca"),
-        F.sum(F.col("cb").cast("decimal(38,0)")).over(w).alias("ccb"),
+        *_cdf(by),
     )
-    tot = j.groupBy(*by).agg(
-        F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b")
-    )
-    t = cum.join(tot, list(by))
-    d = (F.col("cca") * F.col("n_b").cast("decimal(38,0)")
-         - F.col("ccb") * F.col("n_a").cast("decimal(38,0)"))
+    d = _cdf_gap()
     term = (F.col("h").cast("double")
             * d.cast("double") * d.cast("double"))
     agg = t.groupBy(*by).agg(
         F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"),
         F.sum(term).alias("__s"),
     )
-    na = F.col("n_a").cast("decimal(38,0)")
-    nb_ = F.col("n_b").cast("decimal(38,0)")
-    nn = ((F.col("n_a") + F.col("n_b"))).cast("decimal(38,0)")
-    den = (na * nb_).cast("double") * (nn * nn).cast("double")
+    nn = (F.col("n_a") + F.col("n_b")).cast("decimal(38,0)")
+    den = _n_ab() * (nn * nn).cast("double")
     cvm = F.when(
         (F.col("n_a") > 0) & (F.col("n_b") > 0),
         F.round(F.col("__s") / den, ndigits),
@@ -3923,12 +3780,7 @@ def cvm_drift(
     from a stored histogram tier (:func:`cvm_from_hists`,
     parity-tested).  One groupBy per snapshot; everything downstream
     runs on the tiny bin table."""
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    return cvm_from_hists(hist(df_a, "ca"), hist(df_b, "cb"), by=by,
+    return cvm_from_hists(*_pair_hists(df_a, df_b, by, val, scale), by=by,
                           ndigits=ndigits)
 
 
@@ -3964,12 +3816,7 @@ def cliffs_delta(
     stored hist tier unchanged.  Output: ``*by, n_a, n_b, delta,
     magnitude``.
     """
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    return cliffs_from_hists(hist(df_a, "ca"), hist(df_b, "cb"),
+    return cliffs_from_hists(*_pair_hists(df_a, df_b, by, val, scale),
                              by=by, ndigits=ndigits)
 
 
@@ -3982,31 +3829,7 @@ def cliffs_from_hists(
     """:func:`cliffs_delta` fed pre-aggregated bin count frames
     (``*by, bin, ca`` / ``*by, bin, cb``) — the hist-tier-served form,
     identical arithmetic (see cliffs_delta for the construction)."""
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by, "bin",
-            F.coalesce("ca", F.lit(0)).cast("decimal(38,0)").alias("ca"),
-            F.coalesce("cb", F.lit(0)).cast("decimal(38,0)").alias("cb"),
-        )
-    )
-    t = (F.col("ca") + F.col("cb"))
-    w_lt = (
-        Window.partitionBy(*by).orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    per_bin = j.select(
-        *by, "ca", "cb", t.alias("t"),
-        F.coalesce(F.sum(t).over(w_lt), F.lit(0).cast("decimal(38,0)"))
-        .alias("cum_lt"),
-    )
-    g = per_bin.groupBy(*by).agg(
-        F.sum("ca").alias("n_a"),
-        F.sum("cb").alias("n_b"),
-        F.sum(
-            F.col("ca") * (2 * F.col("cum_lt") + F.col("t") + 1)
-        ).alias("__r2"),
-    )
+    g = _rank_sums(ha, hb, by)
     d2 = (F.col("__r2") - F.col("n_a") * (F.col("n_a") + 1)
           - F.col("n_a") * F.col("n_b"))
     delta = F.when(
@@ -4061,13 +3884,8 @@ def drift_report(
     mw_z, mw_shifted, delta, magnitude, psi, jsd_norm, emd,
     cramers_v, chi2_drifted``.
     """
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    ha = hist(df_a, "ca").persist()
-    hb = hist(df_b, "cb").persist()
+    ha, hb = _pair_hists(df_a, df_b, by, val, scale)
+    ha, hb = ha.persist(), hb.persist()
     base = ks_from_hists(ha, hb, by=by).select(
         *by, "n_a", "n_b", "ks_d",
         F.col("drifted").alias("ks_drifted"))

@@ -48,8 +48,12 @@ def hash_bucket(col: Column, seed: int, width: int) -> Column:
     v >> (32-4j) = the int value of the first j hex digits), so the
     shortcut parses j characters instead of 8 and skips the double
     division/multiply/floor — value-identical, just cheaper.  Any
-    other width falls back to the full chain."""
+    other width falls back to the full chain.  Buckets are int, so a
+    width above 2^31 (e.g. 16^8) is rejected: both paths would overflow
+    int and return NULL or negative buckets."""
     w = int(width)
+    if w > 1 << 31:
+        raise ValueError(f"hash_bucket width {w} exceeds 2^31 (int buckets)")
     j = 0
     p = 1
     while p < w:

@@ -91,6 +91,16 @@ def _norm_sql(a: str, dim: int) -> str:
     return f"SQRT(0.0D{terms})"
 
 
+def _sized_sql(expr: str, dim: int, *cols: str) -> str:
+    """``expr`` when every array in ``cols`` has exactly ``dim``
+    elements, else NULL.  The unrolled kernels read elements 0..dim-1
+    only, so without this a longer vector scores its truncated prefix
+    and a shorter one fails on an out-of-range index; NULL is what the
+    higher-order fold gives for mismatched lengths."""
+    sized = " AND ".join(f"size(`{c}`) = {int(dim)}" for c in cols)
+    return f"CASE WHEN {sized} THEN {expr} END"
+
+
 def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
     """Generic Column-based dot product (the interpreted higher-order
     fold).  Kept for callers whose operands are not plain named columns
@@ -121,13 +131,13 @@ def cosine_to_query(
     out: str = "cos",
     ndigits: int = 4,
 ) -> DataFrame:
-    """Brute-force cosine of every row against a literal query vector."""
+    """Brute-force cosine of every row against a literal query vector
+    (NULL for a row whose vector length differs from the query's)."""
     qn = float(sum(x * x for x in query)) ** 0.5
-    cos = F.expr(
+    cos = F.expr(_sized_sql(
         f"ROUND({_dot_lit_sql(vec_col, [float(x) for x in query])}"
         f" / ({_norm_sql(vec_col, len(query))} * {_fmt_lit(qn)}),"
-        f" {int(ndigits)})"
-    )
+        f" {int(ndigits)})", len(query), vec_col))
     return emb.withColumn(out, cos)
 
 
@@ -304,11 +314,13 @@ def knn_join(
     (query, corpus) row is ranked per query with a window. Exact but
     O(|batch| x N) scored rows — this is the correctness baseline;
     :func:`ivf_knn_join` is the scale path that bounds the scored set
-    by probing, exactly like cos_dup_pairs' bucketed= split.
+    by probing, exactly like cos_dup_pairs' bucketed= split.  ``dim``
+    unrolls the cosine kernel for that vector length; a query or corpus
+    vector of any other length scores NULL.
     """
     def nrm(name):
-        return (F.expr(_norm_sql(name, dim)) if dim is not None
-                else _norm(F.col(name)))
+        return (F.expr(_sized_sql(_norm_sql(name, dim), dim, name))
+                if dim is not None else _norm(F.col(name)))
 
     q = queries.select(
         F.col(qid_col).alias("qid"),
@@ -319,9 +331,9 @@ def knn_join(
         F.col(vec_col).cast("array<double>").alias("v"),
     ).withColumn("n", nrm("v"))
     if dim is not None:
-        cos = F.expr(
+        cos = F.expr(_sized_sql(
             f"ROUND({_dot_sql('v', 'qv', dim)} / (`n` * `qn`),"
-            f" {int(ndigits)})")
+            f" {int(ndigits)})", dim, "v", "qv"))
     else:
         cos = F.round(
             _dot(F.col("v"), F.col("qv")) / (F.col("n") * F.col("qn")),
@@ -391,8 +403,9 @@ def ivf_knn_join(
     ).withColumn("n", _norm(F.col("v"))).withColumn(
         "cid", ivf_assign_col("v", centroids)
     )
-    cos = F.expr(
-        f"ROUND({_dot_sql('v', 'qv', dim)} / (`n` * `qn`), {int(ndigits)})")
+    cos = F.expr(_sized_sql(
+        f"ROUND({_dot_sql('v', 'qv', dim)} / (`n` * `qn`), {int(ndigits)})",
+        dim, "v", "qv"))
     scored = c.join(F.broadcast(q), on="cid").select(
         "qid", "nn_id", cos.alias("cos")
     )
@@ -432,12 +445,12 @@ def cosine_dup_pairs(
     probability p, at L bucket joins of cost. The bucketed frame carries
     all L bucket ids from one pass and is persisted before the
     self-joins (a self-join duplicates its input subtree — the round-2
-    dedup lesson). The persisted block stays referenced by the returned
-    lazy plan for as long as the caller holds it — intentional (every
-    action on the plan reuses it); storage is reclaimed by Spark's
-    ContextCleaner once the plan is garbage-collected, or immediately by
-    materializing the pairs (``df.localCheckpoint()``) and dropping the
-    reference."""
+    dedup lesson). The persisted block is a SQL cache entry: it stays
+    registered in the session's CacheManager — and every action on the
+    returned plan reuses it — until an explicit ``unpersist()`` or
+    ``spark.catalog.clearCache()``.  Garbage-collecting the returned
+    plan does NOT free it (ContextCleaner does not release CacheManager
+    entries), so a long-lived session should clear it after use."""
     # norm stays higher-order: the bucketed path's projection also
     # carries the HOF bucket expressions, so it is interpreted either
     # way, and an unrolled chain evaluates SLOWER interpreted than the
@@ -449,9 +462,9 @@ def cosine_dup_pairs(
         _norm(v).alias("n"),
     )
     if dim is not None:
-        cos = F.expr(
+        cos = F.expr(_sized_sql(
             f"ROUND({_dot_sql('va', 'vb', dim)} / (`na` * `nb`),"
-            f" {int(ndigits)})")
+            f" {int(ndigits)})", dim, "va", "vb"))
     else:
         cos = F.round(
             _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
@@ -635,9 +648,9 @@ def semantic_dup_pairs(
         "cid", F.col("id").alias("b"), F.col("v").alias("vb"),
         F.col("n").alias("nb"), F.col("ccos").alias("b_ccos"),
     )
-    cos = F.expr(
+    cos = F.expr(_sized_sql(
         f"ROUND({_dot_sql('va', 'vb', dim)} / (`na` * `nb`),"
-        f" {int(ndigits)})")
+        f" {int(ndigits)})", dim, "va", "vb"))
     return (
         a.join(b, on="cid")
         .filter(F.col("a") < F.col("b"))
@@ -743,9 +756,10 @@ def semantic_incremental_pairs(
         "cid", F.col("id").alias("nb"), F.col("v").alias("vb"),
         F.col("n").alias("nnb"),
     )
-    cos = F.expr(
-        f"ROUND({_dot_sql('va', 'vb', len(centroids[0][1]))}"
-        f" / (`nna` * `nnb`), {int(ndigits)})")
+    dim = len(centroids[0][1])
+    cos = F.expr(_sized_sql(
+        f"ROUND({_dot_sql('va', 'vb', dim)} / (`nna` * `nnb`),"
+        f" {int(ndigits)})", dim, "va", "vb"))
     return (
         probe.join(build, on="cid")
         .filter(F.col("na") != F.col("nb"))

@@ -431,10 +431,6 @@ def apply_ruleset(
     return wide
 
 
-def step_columns(ruleset: SparkRuleSet) -> list[str]:
-    return [f"step_{i}" for i in range(len(ruleset.rules) + 1)]
-
-
 def register_rule(name: str, fn: Callable, kind: str = CODE) -> None:
     """Register a custom rule implementation into the plan registry."""
     RULES[name] = (fn, kind)

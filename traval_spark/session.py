@@ -13,6 +13,8 @@ Configuration rationale (SURVEY.md §4.2):
 - shuffle partitions default to the core count: the engine is designed for
   a 1000-executor cluster where this would be raised to O(cores*2-3); the
   value here only serves local runs and is overridable.
+- driver heap defaults to about half the memory the process may use
+  (cgroup limit, else ``MemTotal``); ``SPARK_DRIVER_MEM`` overrides it.
 """
 
 from __future__ import annotations
@@ -20,6 +22,33 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """About half of the memory this process may use: the cgroup limit
+    (v2 ``memory.max``, else v1 ``memory.limit_in_bytes``) when one is
+    set, else ``MemTotal``.  A local-mode driver JVM holds every
+    executor, so a fixed heap larger than the box gets the JVM killed
+    by the kernel instead of spilling."""
+    limit = None
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        # "max" (v2) or a near-2^63 sentinel (v1) means no limit
+        if raw.isdigit() and int(raw) < 1 << 60:
+            limit = int(raw)
+            break
+    if limit is None:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    limit = int(line.split()[1]) * 1024
+                    break
+    return f"{max(1, limit // 2 // (1 << 30))}g"
 
 
 def get_spark(
@@ -78,7 +107,8 @@ def get_spark(
         # on the wide dot-product/join stages (scale-independent JVM
         # property, not a local-mode tune)
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
